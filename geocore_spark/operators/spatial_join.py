@@ -178,41 +178,75 @@ def polygon_cover_cells(
 _COVER_CACHE: OrderedDict[tuple, tuple] = OrderedDict()
 
 
+def _input_stamp(spark, layer: DataFrame) -> tuple:
+    """(path, size, mtime) of every file ``layer`` reads, sorted; empty
+    for a layer that carries its own rows."""
+    sc = spark.sparkContext
+    stamp = []
+    for f in sorted(layer.inputFiles()):
+        path = sc._jvm.org.apache.hadoop.fs.Path(f)
+        st = path.getFileSystem(sc._jsc.hadoopConfiguration()).getFileStatus(path)
+        stamp.append((f, st.getLen(), st.getModificationTime()))
+    return tuple(stamp)
+
+
 def _cover_cached(spark, polygons: DataFrame, res: int):
-    """Driver-side cover table + broadcast WKB map, cached per
-    (layer plan semantic hash, res).
+    """Broadcast cover frame, its cover resolutions and the broadcast WKB
+    map of a polygon layer, cached per (layer content, res).
 
     Layers are reused across many joins in a session; without the cache
-    every call pays the collect + cover construction + broadcast again
-    (~1 s for a 24-polygon layer — pure fixed cost). semanticHash keys
-    the *plan*, so a layer read from the same source hits; sources whose
-    content changes under an identical plan must construct a fresh
-    DataFrame (normal for parquet reads — new snapshot, new path).
+    every call pays the collect, the cover construction, the cover frame
+    and the broadcast again. A hit starts no Spark job. The key contract:
 
-    The key includes the SparkContext's applicationId so entries can never
-    outlive their session (a broadcast created on a stopped context is
-    unusable). Evicted entries UNPERSIST (not destroy) their broadcast:
-    unpersist frees the executor copies but leaves the driver value
-    rebroadcastable, so a still-pending DataFrame built from an earlier
-    join keeps working if it executes after eviction; destroy() would
-    fail those tasks with "Attempted to use Broadcast after destroy".
+    - the layer's ``semanticHash``, confirmed on a hit by
+      ``sameSemantics`` against the cached layer. For a local relation
+      (``sources.polygons`` layers, ``createDataFrame`` from pandas) the
+      plan holds the rows, so two builds of the same layer hit and a
+      changed row misses;
+    - the (path, size, mtime) of every input file. A file-backed layer
+      keeps its plan, and so its hash, when the files under its path are
+      rewritten; the stamp makes a rewrite miss instead of serving the old
+      cover;
+    - the SparkContext's applicationId, so entries never outlive their
+      session (a broadcast created on a stopped context is unusable).
+
+    A layer built from a list of tuples is an RDD scan whose hash changes
+    with every build: it hits only when the same DataFrame is passed again.
+
+    Evicted entries UNPERSIST (not destroy) their broadcast: unpersist
+    frees the executor copies but leaves the driver value rebroadcastable,
+    so a still-pending DataFrame built from an earlier join keeps working
+    if it executes after eviction; destroy() would fail those tasks with
+    "Attempted to use Broadcast after destroy".
     """
-    key = (spark.sparkContext.applicationId, polygons.semanticHash(), res)
+    key = (
+        spark.sparkContext.applicationId,
+        polygons.semanticHash(),
+        _input_stamp(spark, polygons),
+        res,
+    )
     hit = _COVER_CACHE.get(key)
-    if hit is not None:
-        return hit
+    if hit is not None and hit[0].sameSemantics(polygons):
+        return hit[1:]
     poly_pdf = polygons.select("polygon_id", "wkb").toPandas()
     cover = polygon_cover_cells(poly_pdf, res)
+    cover_df = F.broadcast(
+        spark.createDataFrame(
+            cover[["res", "cell", "polygon_id", "full"]],
+            "res int, cell string, polygon_id long, full boolean",
+        )
+    )
+    resolutions = sorted(int(r) for r in cover["res"].unique())
     wkb_by_id = {int(r["polygon_id"]): bytes(r["wkb"]) for _, r in poly_pdf.iterrows()}
     bc = spark.sparkContext.broadcast(wkb_by_id)
     if len(_COVER_CACHE) >= 16:
-        _, (_, old_bc) = _COVER_CACHE.popitem(last=False)
+        _, (*_, old_bc) = _COVER_CACHE.popitem(last=False)
         try:
             old_bc.unpersist(blocking=False)
         except Exception:
             pass  # its session may already be gone
-    _COVER_CACHE[key] = (cover, bc)
-    return cover, bc
+    _COVER_CACHE[key] = (polygons, cover_df, resolutions, bc)
+    return cover_df, resolutions, bc
 
 
 def pip_polygon_join(
@@ -232,7 +266,7 @@ def pip_polygon_join(
     row-at-a-time shapely apply (data_pipeline.py:45).
     """
     spark = points.sparkSession
-    cover, bc = _cover_cached(spark, polygons, res)
+    cover_df, resolutions, bc = _cover_cached(spark, polygons, res)
 
     @F.pandas_udf("boolean")
     def _refine(lat_s: pd.Series, lon_s: pd.Series, pid_s: pd.Series) -> pd.Series:
@@ -255,13 +289,6 @@ def pip_polygon_join(
     # (small) candidate set. At 100 TB the explode factor is the distinct
     # cover-res count (<= 4), applied before a broadcast join — no
     # shuffle of the big side.
-    resolutions = sorted(int(r) for r in cover["res"].unique())
-    cover_df = F.broadcast(
-        spark.createDataFrame(
-            cover[["res", "cell", "polygon_id", "full"]],
-            "res int, cell string, polygon_id long, full boolean",
-        )
-    )
     pts = points.withColumn(
         "__rc",
         F.explode(

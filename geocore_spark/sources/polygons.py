@@ -5,15 +5,30 @@ Plays the role of the reference's vector layers — the coastline shapefile
 (/root/reference/experiment_configs/lightgbm_gbdt_model_ingenious.yaml:5-12).
 Small layers (tens-to-hundreds of polygons) built driver-side with numpy and
 broadcast to executors — the same shape as gpd.read_file -> broadcast.
+
+Each layer is a local relation: its rows travel in the plan itself, built
+through pandas and Arrow. Two builds of the same layer therefore have equal
+``semanticHash`` values, which is what lets ``pip_polygon_join`` reuse a
+layer's cell cover across calls, and collecting the layer runs no Python
+worker. A frame built from a list of tuples would be an RDD scan instead,
+with a new hash on every build.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from geocore_spark.geometry import wkb as wkb_mod
 from geocore_spark.sources.pages import CLUSTERS
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` as a local relation: pandas goes through Arrow into a
+    ``LocalRelation``, where a list of tuples would give an RDD scan."""
+    names = [field.split()[0] for field in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
 
 
 def _regular_polygon(clat: float, clon: float, radius_deg: float, nv: int, phase: float):
@@ -49,13 +64,11 @@ def polygon_layer(
             (
                 i,
                 layer_names[i % len(layer_names)],
-                bytearray(wkb_mod.encode_polygon([ring])),
+                wkb_mod.encode_polygon([ring]),
                 round(float(rng.uniform(0, 100)), 3),
             )
         )
-    return spark.createDataFrame(
-        rows, "polygon_id long, layer string, wkb binary, attr double"
-    )
+    return _local_frame(spark, rows, "polygon_id long, layer string, wkb binary, attr double")
 
 
 def rect_layer(spark: SparkSession, n: int = 16) -> DataFrame:
@@ -85,7 +98,8 @@ def rect_layer(spark: SparkSession, n: int = 16) -> DataFrame:
                 round(float(rng.uniform(0, 100)), 3),
             )
         )
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows,
         "rect_id long, lat_min double, lat_max double, lon_min double, lon_max double, attr double",
     )

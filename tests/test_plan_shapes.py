@@ -9,14 +9,15 @@ value tests but regress at scale — these tests fail it early.
 
 import contextlib
 import io
+import re
 
 import __spark_entry__ as em
 
 
-def _formatted(df) -> str:
+def _formatted(df, mode="formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode)
     return buf.getvalue()
 
 
@@ -93,6 +94,27 @@ def test_pip_polygon_join_broadcasts_cover(spark, sf_dir):
     p = _formatted(em.q_pip_rect_join(spark, sf_dir))
     assert "CartesianProduct" not in p
     assert "BroadcastHashJoin" in p or "BroadcastExchange" in p
+
+
+def test_pip_polygon_layer_join_broadcasts_local_cover(spark, sf_dir):
+    """The polygon path proper: the cell cover is a local relation that is
+    broadcast into the (res, cell) hash join, and no Python RDD scan
+    reads the layer (a list-built layer would show as Scan ExistingRDD)."""
+    from geocore_spark.operators import spatial_join
+    from geocore_spark.sources import polygons as pgn
+
+    df = spatial_join.pip_polygon_join(
+        em._event_points(spark, sf_dir), pgn.polygon_layer(spark, 24)
+    )
+    p = _formatted(df, "simple")
+    assert re.search(r"BroadcastHashJoin \[__rc#\d+\.res, __rc#\d+\.cell\]", p)
+    assert re.search(
+        r"BroadcastExchange [^\n]*\n[ :]*\+- LocalTableScan "
+        r"\[res#\d+, cell#\d+, polygon_id#\d+L, full#\d+\]",
+        p,
+    )
+    assert "ExistingRDD" not in p
+    assert "CartesianProduct" not in p
 
 
 def test_embedding_topk_broadcast_no_shuffle_of_corpus(spark, sf_dir):

@@ -1,5 +1,8 @@
 """Spatial operators vs brute-force ground truth on synthetic points."""
 
+import time
+import uuid
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -7,6 +10,7 @@ from pyspark.sql import functions as F
 from geocore_spark.functions import tiling as tl
 from geocore_spark.functions.geodesy import EARTH_RADIUS_KM
 from geocore_spark.geometry import pip as pip_mod
+from geocore_spark.geometry import wkb as wkb_mod
 from geocore_spark.operators import knn, skew, spatial_join, zonal
 from geocore_spark.sources import polygons as pgn
 from geocore_spark.sources import raster as rst
@@ -56,19 +60,107 @@ def test_pip_rect_join_matches_brute_force(spark):
     assert len(want) > 0  # fixture must exercise hits
 
 
-def test_pip_polygon_join_matches_numpy(spark):
-    pts, lat, lon = _points_df(spark, 500, seed=6)
-    polys = pgn.polygon_layer(spark, 24)
-    got = {
-        (r["id"], r["polygon_id"])
-        for r in spatial_join.pip_polygon_join(pts, polys).select("id", "polygon_id").collect()
-    }
+def _pairs(joined) -> set:
+    return {(r["id"], r["polygon_id"]) for r in joined.select("id", "polygon_id").collect()}
+
+
+def _pip_reference(polys, lat, lon) -> set:
+    """(point index, polygon_id) pairs from the numpy ray-cast kernel."""
     want = set()
     for pr in polys.select("polygon_id", "wkb").collect():
         inside = pip_mod.points_in_wkb(lon, lat, bytes(pr["wkb"]))
         want |= {(int(i), pr["polygon_id"]) for i in np.nonzero(inside)[0]}
-    assert got == want
+    return want
+
+
+def _jobs_started_by(spark, fn):
+    """(fn(), number of Spark jobs it started), counted by job group. The
+    status tracker sees job starts asynchronously, so a sentinel job in a
+    second group is awaited first: once it shows, every earlier start has."""
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    group, sentinel = f"under-test-{tag}", f"sentinel-{tag}"
+    sc.setJobGroup(group, "under test")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(sentinel, "sentinel")
+        spark.range(4).collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never reached the status tracker"
+        time.sleep(0.05)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pip_polygon_join_matches_numpy(spark):
+    pts, lat, lon = _points_df(spark, 500, seed=6)
+    polys = pgn.polygon_layer(spark, 24)
+    want = _pip_reference(polys, lat, lon)
+    assert _pairs(spatial_join.pip_polygon_join(pts, polys)) == want
     assert len(want) > 0
+
+
+def test_pip_polygon_cover_cache_hits_rebuilt_layer(spark):
+    """Two builds of the same layer share one cover entry, and the second
+    join starts no Spark job while it is built (no layer collect). A layer
+    built from a list of tuples is an RDD scan whose plan hash changes with
+    every build: it may miss the cache, never the answer."""
+    res = 10  # no other test joins at this res, so its entries are ours
+    pts, lat, lon = _points_df(spark, 2000, seed=12)
+    local = pgn.polygon_layer(spark, 24)
+    want = _pip_reference(local, lat, lon)
+    assert len(want) > 0
+    first, jobs_miss = _jobs_started_by(
+        spark, lambda: spatial_join.pip_polygon_join(pts, pgn.polygon_layer(spark, 24), res=res)
+    )
+    second, jobs_hit = _jobs_started_by(
+        spark, lambda: spatial_join.pip_polygon_join(pts, pgn.polygon_layer(spark, 24), res=res)
+    )
+    assert jobs_miss >= 1  # the counter sees the layer collect of a miss
+    assert jobs_hit == 0
+    assert len([k for k in spatial_join._COVER_CACHE if k[-1] == res]) == 1
+    assert _pairs(first) == want and _pairs(second) == want
+    rows = [tuple(r) for r in local.collect()]
+    for _ in range(2):
+        rdd_layer = spark.createDataFrame(rows, local.schema)
+        assert _pairs(spatial_join.pip_polygon_join(pts, rdd_layer, res=res)) == want
+
+
+def _square_layer(spark, squares):
+    """Layer of axis-aligned squares, ``squares`` = [(polygon_id, lon0, lat0, edge)]."""
+    rows = [
+        (
+            pid,
+            "fault",
+            wkb_mod.encode_polygon(
+                [np.array([[x, y], [x + e, y], [x + e, y + e], [x, y + e]], dtype=float)]
+            ),
+            float(pid),
+        )
+        for pid, x, y, e in squares
+    ]
+    return pgn._local_frame(spark, rows, "polygon_id long, layer string, wkb binary, attr double")
+
+
+def test_pip_polygon_cover_not_stale_after_layer_rewrite(spark, tmp_path):
+    """A parquet layer rewritten at the same path keeps its plan hash; the
+    join on the new read must use the new polygons, not a cached cover."""
+    path = str(tmp_path / "layer")
+    pts, lat, lon = _points_df(spark, 2000, seed=13, lat_range=(-5, 15))
+    before = [(0, 0.0, 0.0, 10.0), (1, 20.0, 0.0, 10.0)]
+    after = [(0, 40.0, 0.0, 10.0), (1, -30.0, 0.0, 10.0)]
+    results = []
+    for squares in (before, after):
+        _square_layer(spark, squares).write.mode("overwrite").parquet(path)
+        layer = spark.read.parquet(path)
+        want = _pip_reference(layer, lat, lon)
+        assert len(want) > 0
+        assert _pairs(spatial_join.pip_polygon_join(pts, layer)) == want
+        results.append(want)
+    assert results[0] != results[1]
 
 
 def test_pip_polygon_join_carries_attrs(spark):
